@@ -19,6 +19,10 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# the largest query (or eval) side collected to the driver for the Arrow
+# scoring path; bigger sides take the broadcast-expression path
+MAX_DRIVER_QUERIES = 4096
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -70,7 +74,6 @@ def brute_force_topk(
         and isinstance(q_vec_dt, T.ArrayType)
         and isinstance(q_vec_dt.elementType, T.DoubleType)
     )
-    MAX_DRIVER_QUERIES = 4096
     q_rows = None
     if is_double_vec:
         q_rows = queries.select(

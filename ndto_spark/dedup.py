@@ -23,6 +23,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .spill import scratch_dir, spill
+
 # universal-hash modulus: the first prime ABOVE 2^32 (the base-hash range).
 # The modulus must be comparable to the input range: with a huge modulus
 # (e.g. Mersenne-61) and a*x+b < modulus, h(x) is MONOTONE in x and every
@@ -292,23 +294,13 @@ def _minhash_base_sigs(
         F.transform(word_shingles(F.col("_t"), k), md5_low32).alias("hv"),
     )
     if materialize:
-        # spill the hashed-shingle frame ONCE to a run-scoped temp parquet
-        # (the near_dup_groups lineage-truncation pattern): callers whose
-        # verify stage consumes ``base`` in a LATER job (after the
-        # candidate materialization) would otherwise tokenize+shingle the
-        # corpus a second time — cross-job exchange reuse does not exist.
+        # spill the hashed-shingle frame ONCE (spill.spill's cross-job
+        # lineage cut): callers whose verify stage consumes ``base`` in a
+        # LATER job (after the candidate materialization) would otherwise
+        # tokenize+shingle the corpus a second time — cross-job exchange
+        # reuse does not exist.
         # Compact (doc, 32-bit hash array) rows only; text never spills.
-        import atexit
-        import os
-        import shutil
-        import tempfile
-
-        spark = df.sparkSession
-        run_dir = tempfile.mkdtemp(prefix="ndto_mhbase_")
-        atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-        p = os.path.join(run_dir, "base")
-        proj.write.parquet(p)
-        proj = spark.read.parquet(p)
+        proj = spill(proj, "ndto_mhbase_")
     base = proj.repartition(F.col("doc"))
     exh = base.select("doc", F.explode_outer("hv").alias("x"))
     params = _hash_params(num_hashes, seed)
@@ -390,27 +382,14 @@ def minhash_lsh_pairs(
     cands = _lsh_candidates(sigs, num_hashes, bands)
     if verify_threshold is None:
         return cands
-    # materialize the (tiny) candidate-pair set ONCE to a run-scoped temp
-    # parquet and read it back (the near_dup_groups lineage-truncation
-    # pattern): the verify below consumes it from THREE places (the
-    # cand-doc broadcast, the pair restriction, and every downstream
-    # consumer), and each would otherwise re-execute the whole
-    # signature+banding+distinct pipeline — runtime exchange reuse does
-    # not bridge these consumers reliably (measured: the full verify ran
-    # the candidate pipeline ~3x, 11.2 s vs 7 s with the spill at sf1.0).
-    # Run-dir lifetime follows near_dup_groups: reclaimed at interpreter
-    # exit, callers needing the pairs past process exit write their own.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_mhcands_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    cand_path = os.path.join(run_dir, "cands")
-    cands.write.parquet(cand_path)
-    cands = spark.read.parquet(cand_path)
+    # materialize the (tiny) candidate-pair set ONCE through spill.spill:
+    # the verify below consumes it from THREE places (the cand-doc
+    # broadcast, the pair restriction, and every downstream consumer), and
+    # each would otherwise re-execute the whole signature+banding+distinct
+    # pipeline — runtime exchange reuse does not bridge these consumers
+    # reliably (measured: the full verify ran the candidate pipeline ~3x,
+    # 11.2 s vs 7 s with the spill at sf1.0).
+    cands = spill(cands, "ndto_mhcands_")
     # verify ONLY the candidate pairs (not the full all-pairs join): restrict
     # the shingle inverted index to candidate docs via a semi-join, compute
     # intersections, and keep candidate pairs above the exact threshold.
@@ -588,16 +567,14 @@ def near_dup_groups(
     per round) and are unpersist()ed on exit.
 
     Temp-dir lifetime: the RETURNED DataFrame lazily reads the final
-    round's parquet, so the run dir must outlive the call when shortcut
-    rounds ran — it is removed at interpreter exit (atexit), and eagerly
-    on any exception mid-loop (including non-convergence). Callers that
-    need the labels past process exit should write them to their own
-    storage.
+    round's parquet, so the run dir (a ``spill.scratch_dir``) must outlive
+    the call when shortcut rounds ran — it is removed at interpreter exit,
+    and eagerly on any exception mid-loop (including non-convergence).
+    Callers that need the labels past process exit should write them to
+    their own storage.
     """
-    import atexit
     import os
     import shutil
-    import tempfile
 
     shortcut_after = 4
     spark = df.sparkSession
@@ -706,7 +683,7 @@ def near_dup_groups(
                 # cloned side recomputed it — measured 8.5 s vs 1.4 s for
                 # the first spill-round write on a 600-image chain graph)
                 if run_dir is None:
-                    run_dir = tempfile.mkdtemp(prefix="ndto_neardup_")
+                    run_dir = scratch_dir("ndto_neardup_")
                 entry = os.path.join(run_dir, "labels_entry")
                 labels.write.parquet(entry)
                 labels = spark.read.parquet(entry)
@@ -763,7 +740,7 @@ def near_dup_groups(
                     ).alias("_chg"),
                 )
                 if run_dir is None:
-                    run_dir = tempfile.mkdtemp(prefix="ndto_neardup_")
+                    run_dir = scratch_dir("ndto_neardup_")
                 path = os.path.join(run_dir, f"round_{i}")
                 upd.write.parquet(path)
                 cur = spark.read.parquet(path)
@@ -796,10 +773,6 @@ def near_dup_groups(
             f"near_dup_groups did not converge within max_iter={max_iter} "
             "rounds (component diameter exceeds max_iter); raise max_iter"
         )
-    if run_dir is not None:
-        # the returned DataFrame lazily reads the final round's parquet:
-        # reclaim the run-scoped dir at interpreter exit (docstring contract)
-        atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
     # singletons (rows outside the pair graph) rejoin here, keeping
     # themselves — the corpus is touched exactly once, not once per round
     return (
@@ -1884,9 +1857,11 @@ def semantic_decontaminate(
     |eval| beyond a few thousand, bucket first (``embedding_near_dups``'
     LSH path) — this operator is deliberately the exact-verdict shape.
     An eval set with MIXED vector lengths falls back to the expression
-    path (zip_with's null-padding semantics are per-pair there).
+    path (zip_with's null-padding semantics are per-pair there), and so
+    does an eval set of more than ``ann.MAX_DRIVER_QUERIES`` rows, which
+    is never collected.
     """
-    from .ann import dot, norm
+    from .ann import MAX_DRIVER_QUERIES, dot, norm
 
     def _side(df: DataFrame, pre: str) -> DataFrame:
         return (
@@ -1898,15 +1873,14 @@ def semantic_decontaminate(
             .filter(F.col(f"{pre}n") > 0)
         )
 
-    ev_vecs = [
-        r["v"]
-        for r in evalset.select(
-            F.col(vec_col).cast("array<double>").alias("v")
-        ).collect()
-        if r["v"] is not None
-    ]
+    ev_rows = (
+        evalset.select(F.col(vec_col).cast("array<double>").alias("v"))
+        .limit(MAX_DRIVER_QUERIES + 1)
+        .collect()
+    )
+    ev_vecs = [r["v"] for r in ev_rows if r["v"] is not None]
     dims = {len(v) for v in ev_vecs}
-    if len(dims) <= 1:
+    if len(ev_rows) <= MAX_DRIVER_QUERIES and len(dims) <= 1:
         import numpy as np
         import pandas as pd
         from pyspark.sql import types as T

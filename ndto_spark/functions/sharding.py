@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..spill import spill
+
 
 def sequential_positions(
     df: DataFrame, key_col: str, n_partitions: int = 32, order_cols=None
@@ -96,15 +98,10 @@ def shard_manifest(
 
     100 TB shape: range-partitioned parallel sort + per-partition window +
     one partial-agg groupBy on shard_id (≈ rows/shard_size groups). The
-    small manifest is spilled to /tmp parquet (the repo's lineage-spill
-    idiom) so the persisted rank parent can be released immediately — the
-    returned frame holds no cache and no live dependence on the sampled
-    partitioning.
+    small manifest is spilled (``spill.spill``) so the persisted rank
+    parent can be released immediately — the returned frame holds no cache
+    and no live dependence on the sampled partitioning.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     if shard_size <= 0:
         raise ValueError(f"shard_size must be positive, got {shard_size}")
     pos = sequential_positions(df, key_col, n_partitions=n_partitions)
@@ -120,16 +117,10 @@ def shard_manifest(
             F.max(key_col).alias("last_key"),
         )
     )
-    run_dir = tempfile.mkdtemp(prefix="ndto_shards_")
     try:
-        out.write.mode("overwrite").parquet(run_dir)
-    except Exception:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return spill(out, "ndto_shards_")
+    finally:
         unpersist_positions(pos)
-        raise
-    unpersist_positions(pos)
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    return df.sparkSession.read.parquet(run_dir)
 
 
 def grouped_shard_manifest(
@@ -150,10 +141,6 @@ def grouped_shard_manifest(
     Output: (group..., shard_id, n_rows, first_key, last_key); shard_id
     restarts at 0 within every group.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     if shard_size <= 0:
         raise ValueError(f"shard_size must be positive, got {shard_size}")
     gc = [group_cols] if isinstance(group_cols, str) else list(group_cols)
@@ -222,16 +209,10 @@ def grouped_shard_manifest(
             F.max(key_col).alias("last_key"),
         )
     )
-    run_dir = tempfile.mkdtemp(prefix="ndto_shards_")
     try:
-        out.write.mode("overwrite").parquet(run_dir)
-    except Exception:
-        shutil.rmtree(run_dir, ignore_errors=True)
+        return spill(out, "ndto_shards_")
+    finally:
         part.unpersist()
-        raise
-    part.unpersist()
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    return df.sparkSession.read.parquet(run_dir)
 
 
 def epoch_shuffle(

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..dedup import md5_low32, tokens, word_shingles
+from ..spill import spill
 
 # tiny per-language stopword marker sets for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, list[str]] = {
@@ -442,23 +443,13 @@ def dsir_weights(
     pdb = g.groupBy("id", "is_tgt", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
-    # spill the compact (id, is_tgt, bucket, cnt) frame ONCE to a
-    # run-scoped temp parquet (the near_dup_groups lineage-truncation
-    # pattern): the bucket-model job collects from it EAGERLY below and
-    # the scoring job re-reads it — without the spill each job would
-    # re-tokenize and re-hash the full corpus (model + score = two full
-    # text passes; now one). Text itself never spills.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_dsir_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    p = os.path.join(run_dir, "pdb")
-    pdb.write.parquet(p)
-    pdb = spark.read.parquet(p)
+    # spill the compact (id, is_tgt, bucket, cnt) frame ONCE
+    # (spill.spill's cross-job lineage cut): the bucket-model job
+    # collects from it EAGERLY below and the scoring job re-reads it —
+    # without the spill each job would re-tokenize and re-hash the full
+    # corpus (model + score = two full text passes; now one). Text itself
+    # never spills.
+    pdb = spill(pdb, "ndto_dsir_")
     stats = (
         pdb.groupBy("bucket")
         .agg(

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from .compiler import CompileOptions, Compiler
 from .runner import PARTITION_COL, VIOLATIONS_COL, ValidationResult, _result_from_annotated
 from .spec import Schema, SpecError, normalize
+from .spill import spill
 
 
 _SCALAR_TYPES = (T.StringType, T.LongType, T.DoubleType, T.BooleanType)
@@ -227,20 +228,10 @@ def infer_json_schema(
     # each run their own from_json over the full input — and Spark
     # schedules the two branch stages CONCURRENTLY, doubling the variant
     # parse's allocation pressure (measured bimodal 3 s / 20+ s at 1M
-    # rows). The parsed frame spills to a run-scoped temp parquet
-    # (variant round-trips losslessly through the parquet variant type);
-    # all three consumers read the flat scan.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_inferjson_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    p = os.path.join(run_dir, "parsed")
-    parsed.write.parquet(p)
-    parsed = spark.read.parquet(p)
+    # rows). The parsed frame spills (spill.spill; variant round-trips
+    # losslessly through the parquet variant type); all three consumers
+    # read the flat scan.
+    parsed = spill(parsed, "ndto_inferjson_")
     total = parsed.agg(F.count(F.lit(1)).alias("__n_rows"))
 
     root = parsed.agg(

@@ -34,6 +34,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .spill import spill
+
 # same rationale as ann.MAX_CODEBOOK_LITERALS: the counter table is
 # embedded as a literal map in the filter expression; beyond this the
 # Catalyst tree itself becomes the bottleneck.
@@ -182,16 +184,11 @@ def heavy_hitters(
     # Hash ONCE: the sketch build and the estimate filter use the same
     # depth salted hashes per row, and the md5+conv chain is the dominant
     # per-row cost (oracle-pinned — it cannot change, but it need not run
-    # twice). The (key, pos_0..pos_{d-1}) frame spills to a run-scoped
-    # temp parquet (the near_dup_groups lineage pattern): the build job
-    # aggregates counters from it, the filter job re-reads it with the
-    # positions precomputed. _spread first — both passes otherwise ride
-    # the scan's file-layout-bound task count.
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    # twice). The (key, pos_0..pos_{d-1}) frame spills (spill.spill's
+    # cross-job lineage cut): the build job aggregates counters from it,
+    # the filter job re-reads it with the positions precomputed. _spread
+    # first — both passes otherwise ride the scan's file-layout-bound task
+    # count.
     from .dedup import _spread
 
     pos_cols = [
@@ -200,13 +197,9 @@ def heavy_hitters(
         )
         for j in range(depth)
     ]
-    hashed = _spread(rows.select(col)).select(F.col(col), *pos_cols)
-    spark = df.sparkSession
-    run_dir = tempfile.mkdtemp(prefix="ndto_cmspos_")
-    atexit.register(shutil.rmtree, run_dir, ignore_errors=True)
-    p = os.path.join(run_dir, "pos")
-    hashed.write.parquet(p)
-    hashed = spark.read.parquet(p)
+    hashed = spill(
+        _spread(rows.select(col)).select(F.col(col), *pos_cols), "ndto_cmspos_"
+    )
     # counter table from the precomputed positions — identical (j, pos)
     # stream to cms_table's explode-then-hash
     cms = (

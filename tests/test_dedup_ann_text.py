@@ -722,6 +722,33 @@ def test_semantic_decontaminate_flags_and_counts(spark):
     assert out == {1: (1, 1.0), 2: (2, round(2**-0.5, 9))}
 
 
+def test_semantic_decontaminate_over_cap_eval_side_matches(spark, monkeypatch):
+    """An eval side above ann.MAX_DRIVER_QUERIES is never collected: it takes
+    the broadcast-expression path, which flags the same rows."""
+    import random
+
+    from ndto_spark import ann
+    from ndto_spark.dedup import semantic_decontaminate
+
+    rng = random.Random(7)
+    rows = [
+        (i, [rng.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(200)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    co = df.filter("vec_id % 10 != 0")
+    ev = df.filter("vec_id % 10 = 0")  # 20 eval rows
+
+    def run():
+        return sorted(
+            tuple(r) for r in semantic_decontaminate(co, ev, threshold=0.3).collect()
+        )
+
+    under_cap = run()
+    monkeypatch.setattr(ann, "MAX_DRIVER_QUERIES", 5)
+    over_cap = run()
+    assert under_cap and over_cap == under_cap
+
+
 def test_dup_spans_cross_doc_within_doc_and_short(spark):
     from ndto_spark.dedup import dup_spans
 
