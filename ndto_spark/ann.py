@@ -1,14 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``brute_force_topk``: exact cosine top-k — the correctness baseline. The
-  query set is broadcast; similarities are computed expression-side
-  (zip_with + aggregate, whole-stage codegen) and the per-query top-k is
+- ``brute_force_topk``: exact cosine top-k — the correctness baseline. A
+  query set of at most MAX_DRIVER_QUERIES rows is collected and the corpus
+  streams through the Arrow vector kernel; a bigger one is broadcast and
+  scored expression-side (zip_with + aggregate). The per-query top-k is
   taken with an aggregation (slice(sort_array(collect_list))) so the corpus
   never shuffles more than k rows per query per partition after partial
   aggregation.
 - ``lsh_topk``: the scale path — random-hyperplane LSH buckets shrink the
   candidate set before the exact re-rank. Recall is tunable via
   (num_planes, num_tables).
+
+Every score computed in Python (brute-force pairs, LSH plane projections,
+IVF/k-means list assignment) comes from ``vectors.py``, whose one
+NULL/ragged/NaN contract and ascending-index fold make it bit-identical to
+the ``dot``/``norm`` expressions here; those stay as the over-cap scorers,
+the kernels' test references and the DuckDB oracles' mirrors.
 """
 
 from __future__ import annotations
@@ -26,7 +33,7 @@ MAX_DRIVER_QUERIES = 4096
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
@@ -53,166 +60,137 @@ def brute_force_topk(
 
     Returns (query_id, neighbor_id, cosine_sim), k rows per query,
     self-matches excluded. Ties broken by neighbor id (deterministic).
+    Scores follow the vectors.py contract: a pair with a NULL, NULL-element
+    or different-length vector, or a zero norm, scores NULL (and ranks
+    FIRST, as NULL sorts first in two_phase_topk); NaN elements give NaN
+    (ranked last).
     """
-    # Arrow fast path: when the queries side is small enough to collect
-    # (it was broadcast regardless — same driver footprint class) and the
-    # vectors are array<double>, score all pairs in one vectorized
-    # mapInPandas pass instead of the broadcast-NLJ with an interpreted
-    # HOF fold per pair. BIT-EXACT: ascending-dim accumulation is the
-    # exact left-fold order of dot()/norm(), dot/(qn*cn) the same op
-    # order, and pairs with NULL/ragged vectors emit NULL sims exactly
-    # like the expression path's null-poisoned fold (legitimate NaN/Inf
-    # from zero norms stays NaN/Inf). Non-double element types and
-    # over-cap query sides fall back to the expression path below.
-    from pyspark.sql import types as T
+    return two_phase_topk(_cosine_pairs(corpus, queries, id_col, vec_col), k)
 
-    vec_dt = corpus.schema[vec_col].dataType
-    q_vec_dt = queries.schema[vec_col].dataType
-    is_double_vec = (
-        isinstance(vec_dt, T.ArrayType)
-        and isinstance(vec_dt.elementType, T.DoubleType)
-        and isinstance(q_vec_dt, T.ArrayType)
-        and isinstance(q_vec_dt.elementType, T.DoubleType)
+
+def _codes(col, values: list):
+    """Each element's index in ``values`` (NULL matches None), -1 if
+    absent — so pair filters on ids or groups are int compares."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    idx = pc.index_in(
+        col, value_set=pa.array(values, type=col.type), skip_nulls=False
     )
-    q_rows = None
-    if is_double_vec:
-        q_rows = queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).limit(MAX_DRIVER_QUERIES + 1).collect()
-        if len(q_rows) > MAX_DRIVER_QUERIES:
-            q_rows = None  # too many queries for the driver path
-    if q_rows is not None:
-        import numpy as np
-        import pandas as pd
+    return idx.fill_null(-1).to_numpy(zero_copy_only=False)
 
+
+def _cosine_pairs(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    group_col: Optional[str] = None,
+) -> DataFrame:
+    """(query_id, neighbor_id, cosine_sim) for every (query, corpus) pair
+    whose ids are non-NULL and differ — and, with ``group_col``, whose
+    groups differ null-safely (NULL == NULL).
+
+    A query side of at most MAX_DRIVER_QUERIES rows is collected once and
+    the corpus streams through one Arrow kernel pass (vectors.py) instead
+    of a broadcast nested-loop join with an interpreted HOF fold per pair.
+    Bigger query sides take that broadcast-expression path, which is also
+    the kernel's test reference: both give bit-identical scores.
+    """
+    c_id = corpus.schema[id_col].dataType
+    q_cols = [
+        F.col(id_col).alias("qid"),
+        # self-matches compare in the corpus id type, as the join does
+        F.col(id_col).cast(c_id).alias("qkey"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
+    ]
+    c_cols = [F.col(id_col), F.col(vec_col).cast("array<double>")]
+    if group_col is not None:
+        c_group = corpus.schema[group_col].dataType
+        q_cols.append(F.col(group_col).cast(c_group).alias("qg"))
+        c_cols.append(F.col(group_col))
+    q_rows = (
+        queries.select(*q_cols)
+        .filter(F.col("qid").isNotNull())
+        .limit(MAX_DRIVER_QUERIES + 1)
+        .collect()
+    )
+    if len(q_rows) <= MAX_DRIVER_QUERIES:
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql import types as T
+
+        from . import vectors
         from .dedup import _spread
 
-        q_ids = [r["qid"] for r in q_rows if r["qid"] is not None]
-        q_vecs = [
-            r["qv"] for r in q_rows if r["qid"] is not None
-        ]
-        dims = {len(v) for v in q_vecs if v is not None}
-        d = dims.pop() if len(dims) == 1 else None
-        if d is not None and all(
-            v is not None and not any(x is None for x in v) for v in q_vecs
-        ):
-            m = len(q_ids)
-            Q = np.asarray(q_vecs, dtype=np.float64).reshape(m, d)
-            qn = np.zeros(m)
-            for k2 in range(d):
-                qn = qn + Q[:, k2] * Q[:, k2]
-            qn = np.sqrt(qn)
-            out_schema = T.StructType(
-                [
-                    T.StructField("query_id", queries.schema[id_col].dataType),
-                    T.StructField("neighbor_id", corpus.schema[id_col].dataType),
-                    T.StructField("cosine_sim", T.DoubleType()),
-                ]
-            )
-            qid_arr = np.asarray(q_ids)
+        Q = vectors.from_pylist([r["qv"] for r in q_rows])
+        qn = vectors.own_norms(Q)
+        q_ids = pa.array([r["qid"] for r in q_rows])
 
-            def score(batches):
-                for pdf in batches:
-                    n = len(pdf)
-                    if n == 0 or m == 0:
-                        yield pd.DataFrame(
-                            {
-                                "query_id": qid_arr[:0],
-                                "neighbor_id": pdf["_id"][:0],
-                                "cosine_sim": pd.Series([], dtype="float64"),
-                            }
-                        )
-                        continue
-                    ids = pdf["_id"]
-                    vs = pdf["_v"]
-                    keep_row = np.fromiter(
-                        (i is not None for i in ids), dtype=bool, count=n
-                    )
-                    good = np.fromiter(
-                        (
-                            v is not None and len(v) == d
-                            for v in vs
-                        ),
-                        dtype=bool,
-                        count=n,
-                    ) & keep_row
-                    V = np.zeros((n, d))
-                    if good.any():
-                        # (a NULL *element* inside a full-length vector
-                        # arrives as NaN and scores NaN where the fold
-                        # gave NULL — indistinguishable post-Arrow; no
-                        # gate input carries null elements)
-                        V[good] = (
-                            np.array([np.asarray(v) for v in vs[good]])
-                            .astype(np.float64)
-                            .reshape(int(good.sum()), d)
-                        )
-                    cn = np.zeros(n)
-                    sims = np.zeros((n, m))
-                    for k2 in range(d):
-                        cn = cn + V[:, k2] * V[:, k2]
-                        sims = sims + V[:, k2][:, None] * Q[:, k2][None, :]
-                    cn = np.sqrt(cn)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sims = sims / (cn[:, None] * qn[None, :])
-                    # all pairs except self-matches and dropped rows
-                    pair_keep = keep_row[:, None] & (
-                        ids.to_numpy()[:, None] != qid_arr[None, :]
-                    )
-                    r_idx, q_idx = np.nonzero(pair_keep)
-                    vals = sims[r_idx, q_idx]
-                    na_mask = ~good[r_idx]  # bad vector -> NULL sim
-                    yield pd.DataFrame(
-                        {
-                            "query_id": qid_arr[q_idx],
-                            "neighbor_id": ids.iloc[r_idx].reset_index(
-                                drop=True
-                            ),
-                            "cosine_sim": pd.arrays.FloatingArray(
-                                vals, na_mask
-                            ),
-                        }
-                    )
+        def codes_of(field: str) -> "tuple[list, np.ndarray]":
+            pos: dict = {}
+            code = [pos.setdefault(r[field], len(pos)) for r in q_rows]
+            return list(pos), np.asarray(code, dtype=np.int64)
 
-            src = _spread(
-                corpus.select(
-                    F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-                )
+        keys, q_key = codes_of("qkey")
+        if group_col is not None:
+            groups, q_group = codes_of("qg")
+
+        def score(batch):
+            ids = batch.column(0)
+            cv = vectors.read(batch.column(1))
+            S, ok = vectors.cosines(cv, vectors.own_norms(cv), Q, qn)
+            keep = ids.is_valid().to_numpy(zero_copy_only=False)[:, None] & (
+                _codes(ids, keys)[:, None] != q_key[None, :]
             )
-            return two_phase_topk(src.mapInPandas(score, out_schema), k)
+            if group_col is not None:
+                keep &= _codes(batch.column(2), groups)[:, None] != q_group
+            r, q = np.nonzero(keep)
+            yield [q_ids.take(q), ids.take(r), pa.array(S[r, q], mask=~ok[r, q])]
+
+        schema = T.StructType(
+            [
+                T.StructField("query_id", queries.schema[id_col].dataType),
+                T.StructField("neighbor_id", c_id),
+                T.StructField("cosine_sim", T.DoubleType()),
+            ]
+        )
+        return vectors.map_batches(
+            _spread(corpus.select(*c_cols)), score, schema, len(q_rows)
+        )
 
     # norms precomputed ONCE per vector, not per pair: HOFs run
     # interpreted, so cosine()'s 3 folds per pair cost 3x the necessary
     # work in an all-pairs scorer (measured 14.3 -> 6.7 s on a 1000-node
     # kNN graph). dot/(qn*cn) keeps cosine()'s exact fold and multiply
-    # order — bit-identical floats, the oracles don't move. (A fixed-dim
+    # order — bit-identical floats, the oracles don't move; try_divide
+    # makes a zero norm product NULL, as the kernel does. (A fixed-dim
     # UNROLL of the folds was tried and is ~1.8x SLOWER than the HOF
     # pass: 128 chained GetArrayItems per pair defeat codegen — don't
     # rediscover.)
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            norm(F.col(vec_col)).alias("_qn"),
-        )
-    )
-    c = corpus.select(
+    q_sel = [
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qvec"),
+        norm(F.col(vec_col)).alias("_qn"),
+    ]
+    c_sel = [
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
         norm(F.col(vec_col)).alias("_cn"),
+    ]
+    cond = F.col("query_id") != F.col("neighbor_id")
+    if group_col is not None:
+        q_sel.append(F.col(group_col).alias("qg"))
+        c_sel.append(F.col(group_col).alias("cg"))
+        cond = cond & ~F.col("qg").eqNullSafe(F.col("cg"))
+    q = F.broadcast(queries.select(*q_sel))
+    return corpus.select(*c_sel).join(q, cond).select(
+        "query_id",
+        "neighbor_id",
+        F.try_divide(
+            dot(F.col("qvec"), F.col("cvec")), F.col("_qn") * F.col("_cn")
+        ).alias("cosine_sim"),
     )
-    scored = (
-        c.join(q, F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("_qn") * F.col("_cn"))
-            ).alias("cosine_sim"),
-        )
-    )
-    return two_phase_topk(scored, k)
 
 
 def two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -304,71 +282,55 @@ def lsh_buckets_arrow(
     CodegenFallback path and allocate a fresh array per fold; measured
     6.6 s -> ~0.5 s for 20k x 4x6 x 64 at sf1.0).
 
-    BIT-EXACT: projections accumulate in ascending dimension order — the
-    exact left-fold order of ``lsh_bucket`` — with the same elementary
-    IEEE-754 double ops, and the sign test (NaN -> bit 0) matches
-    F.when(proj > 0). Vectors that are NULL or not exactly ``dim`` long
-    get signature 0 in every table, which is what the expression path's
-    null-propagating fold + when/otherwise(0) yields.
+    BIT-EXACT to ``lsh_bucket``: every plane's projection is a
+    vectors.dots fold, and the sign test counts NaN as positive, as
+    F.when(proj > 0) does (Spark orders NaN above every number). Vectors
+    that are not valid or not exactly ``dim`` long get signature 0 in
+    every table, which is what the expression path's null-poisoned fold +
+    when/otherwise(0) yields.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
-    P = [np.asarray(p, dtype=np.float64) for p in tables]
+    from . import vectors
+
+    ntab = len(tables)
+    P = np.asarray(
+        [p for planes in tables for p in planes], dtype=np.float64
+    ).reshape(sum(len(planes) for planes in tables), dim)
+    # plane -> its bit weight in its table's signature
+    weights = np.zeros((P.shape[0], ntab), dtype=np.int64)
+    j0 = 0
+    for t, planes in enumerate(tables):
+        weights[j0 : j0 + len(planes), t] = [1 << j for j in range(len(planes))]
+        j0 += len(planes)
+    prefix = pa.array([f"{t}:" for t in range(ntab)])
     schema = T.StructType(
         [
             T.StructField(idname, df.schema[id_col].dataType),
             T.StructField("bucket", T.StringType()),
         ]
     )
-    ntab = len(P)
 
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or ntab == 0:
-                yield pd.DataFrame(
-                    {idname: pdf["_id"][:0], "bucket": pd.Series([], dtype=object)}
-                )
-                continue
-            vs = pdf["_v"]
-            good = np.fromiter(
-                (v is not None and len(v) == dim for v in vs),
-                dtype=bool,
-                count=n,
-            )
-            V = np.zeros((n, dim))
-            if good.any():
-                # NULL elements arrive as NaN: every plane's fold then
-                # yields NaN -> bit 0, identical to the expression path's
-                # null-poisoned fold
-                V[good] = (
-                    np.array([np.asarray(v) for v in vs[good]])
-                    .astype(np.float64)
-                    .reshape(int(good.sum()), dim)
-                )
-            sigs = np.zeros((n, ntab), dtype=np.int64)
-            for t in range(ntab):
-                for j in range(P[t].shape[0]):
-                    proj = np.zeros(n)
-                    for i2 in range(dim):
-                        proj = proj + V[:, i2] * P[t][j, i2]
-                    sigs[:, t] += np.where(proj > 0, 1 << j, 0)
-            sigs[~good] = 0
-            ids = pdf["_id"]
-            out_ids = ids.iloc[np.repeat(np.arange(n), ntab)].reset_index(
-                drop=True
-            )
-            buckets = [
-                f"{t}:{sigs[r, t]}" for r in range(n) for t in range(ntab)
-            ]
-            yield pd.DataFrame({idname: out_ids, "bucket": buckets})
+    def gen(batch):
+        ids = batch.column(0)
+        v = vectors.read(batch.column(1))
+        rows = np.nonzero(v.valid & (v.lengths == dim))[0]
+        proj = vectors.dots(vectors.matrix(v, rows, dim), P)
+        sigs = np.zeros((len(ids), ntab), dtype=np.int64)
+        sigs[rows] = ((proj > 0) | np.isnan(proj)).astype(np.int64) @ weights
+        tab = np.tile(np.arange(ntab), len(ids))
+        yield [
+            ids.take(np.repeat(np.arange(len(ids)), ntab)),
+            pc.binary_join_element_wise(
+                prefix.take(tab), pa.array(sigs.ravel()).cast(pa.string()), ""
+            ),
+        ]
 
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-    return src.mapInPandas(gen, schema)
+    src = df.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+    return vectors.map_batches(src, gen, schema)
 
 
 def lsh_topk(
@@ -449,10 +411,12 @@ def lsh_topk(
     return two_phase_topk(scored, k)
 
 
-# The IVF/k-means codebook is embedded as k x dim LITERAL vectors in the
-# assignment expressions — right for a COARSE codebook (k ≤ a few hundred),
-# but a caller passing k in the thousands would build a multi-MB Catalyst
-# tree and stall driver planning with no warning. Fail loudly instead; for
+# A codebook is driver-side metadata: centroid_outliers embeds it as k x dim
+# LITERAL vectors in its expression, and the IVF/k-means assignment kernel
+# ships it to every task and scores each row against all k lists — right
+# for a COARSE codebook (k ≤ a few hundred), but a caller passing k in the
+# thousands would build a multi-MB Catalyst tree (or a rows x k score
+# matrix per batch) with no warning. Fail loudly instead; for
 # large k use the bucketed hyperplane-LSH path (lsh_topk), whose bucket id
 # is O(num_planes) expressions regardless of table count.
 MAX_CODEBOOK_LITERALS = 65_536
@@ -480,9 +444,9 @@ def kmeans_centroids(
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means for the IVF coarse codebook.
 
-    Each iteration is ONE Spark job: expression-side nearest-centroid
-    assignment (k literal dot products + array argmin — no shuffle, same
-    pattern as ivf_topk's assign) followed by a groupBy(cid) with per-
+    Each iteration is ONE Spark job: nearest-centroid assignment in the
+    Arrow kernel (assign_cids_arrow — no shuffle, the same pass ivf_topk
+    runs) followed by a groupBy(cid) with per-
     dimension avg aggregates (codegen'd, partial map-side combine). Only
     the k x dim centroid matrix ever reaches the driver. Empty clusters
     keep their previous centroid. Init = deterministic md5-ordered sample
@@ -496,8 +460,6 @@ def kmeans_centroids(
     makes the whole training loop bit-reproducible across engines (the
     DuckDB oracle replays the same truncation).
     """
-    import math
-
     _check_codebook_size(k, dim)
 
     from .dedup import _spread
@@ -547,19 +509,10 @@ def _lloyds_iterate(
     import math
 
     for _ in range(n_iter):
-        norms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-        # assignment via the vectorized Arrow kernel (bit-exact to the
-        # array_min struct ordering — see assign_cids_arrow); the k
-        # interpreted dot folds per row were the loop's dominant cost
+        # assignment via the vectorized Arrow kernel (Spark's struct order
+        # over the k dot scores — see assign_cids_arrow)
         assigned = assign_cids_arrow(
-            base,
-            "vid",
-            "vec",
-            "x",
-            list(enumerate(cents)),
-            norms,
-            dim,
-            with_id=False,
+            base, "vid", "vec", "x", list(enumerate(cents))
         ).select("cid", F.col("x_vec").alias("vec"))
         means = (
             assigned.groupBy("cid")
@@ -583,115 +536,64 @@ def assign_cids_arrow(
     vec_col: str,
     idname: str,
     cents: "list[tuple]",
-    cent_norms: "list[float]",
-    dim: int,
-    with_id: bool = True,
+    n: int = 1,
 ) -> DataFrame:
-    """Nearest-centroid assignment — ``(idname, idname_vec, idname_nrm,
-    cid)`` — in ONE vectorized Arrow pass instead of n_lists interpreted
-    dot folds per row (the lsh_buckets_arrow treatment; the assignment
-    expression was the dominant cost of the IVF/k-means family).
+    """Nearest-list assignment — ``(idname, idname_vec, idname_nrm, cid)``
+    rows, one per vector and probed list — in ONE vectorized Arrow pass
+    (vectors.py) instead of one interpreted dot fold per row and centroid.
 
-    BIT-EXACT to ``array_min`` over the (-dot/(nrm·cn), cid) structs:
-    folds accumulate in ascending dimension order (dot/norm's left-fold
-    order), (-d)/(nrm·cn) is the same op order, NaN scores sort LAST
-    (Spark's double ordering) via a +inf substitution so argmin picks the
-    smallest non-NaN — ties break to the smaller cid (first occurrence)
-    exactly like the struct ordering — and vectors whose length != dim
-    (null-poisoned dot -> null score, nulls-first struct min) land on the
-    first centroid id, as the expression path resolves them. ``idname_nrm``
-    is the vector's own-length norm fold (what norm(vec) returns
-    regardless of dim mismatches); NULL vectors carry a NULL norm.
-    ``with_id=False`` drops the id column (the Lloyd's loop needs only
-    (cid, vec))."""
+    ``cents`` is the codebook as (cid, vector) pairs; cids are ints, or
+    None for a list nothing may join. A vector's lists are the ``n`` whose
+    (-dot/(nrm·cn), cid) structs sort first in Spark's struct order —
+    NULL scores first, then ascending with NaN greatest, ties to the
+    smaller cid — with cn the centroid norm (0 read as 1). So a vector
+    whose every score is NULL (wrong length, NULL element, zero norm)
+    lands on the smallest cids. ``idname_nrm`` is the vector's own-length
+    norm, NULL when the vector is not valid. Slots that pick a None cid
+    emit no row."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    C = np.asarray([list(v) for _, v in cents], dtype=np.float64)
-    cn_arr = np.asarray(cent_norms, dtype=np.float64)
-    cid_arr = np.asarray([int(c) for c, _ in cents], dtype=np.int64)
-    kk = C.shape[0]
-    if kk:
-        # process centroids in ascending-cid order: the struct ordering
-        # breaks score ties to the SMALLER cid VALUE, and np.argmin picks
-        # the first index — ascending order makes those identical (cid
-        # values are unsorted in the untrained-IVF sampled codebook)
-        order0 = np.argsort(cid_arr, kind="stable")
-        C, cn_arr, cid_arr = C[order0], cn_arr[order0], cid_arr[order0]
-    # a row whose scores are ALL null (len != dim) or ALL NaN (zero norms)
-    # resolves to the minimum cid value under the struct ordering (nulls
-    # first / NaN ties -> cid comparison)
-    first_cid = int(cid_arr[0]) if kk else None
-    vec_dt = df.schema[vec_col].dataType
-    fields = []
-    if with_id:
-        fields.append(T.StructField(idname, df.schema[id_col].dataType))
-    fields += [
-        T.StructField(f"{idname}_vec", T.ArrayType(T.DoubleType())),
-        T.StructField(f"{idname}_nrm", T.DoubleType()),
-        # long, not int: untrained-IVF codebooks carry corpus ids as cids
-        T.StructField("cid", T.LongType()),
-    ]
-    out_schema = T.StructType(fields)
+    from . import vectors
 
-    def gen(batches):
-        for pdf in batches:
-            n = len(pdf)
-            vs = pdf["_v"]
-            good = np.fromiter(
-                (v is not None and len(v) == dim for v in vs),
-                dtype=bool,
-                count=n,
-            )
-            V = np.zeros((n, dim))
-            if good.any():
-                V[good] = (
-                    np.array([np.asarray(v) for v in vs[good]])
-                    .astype(np.float64)
-                    .reshape(int(good.sum()), dim)
-                )
-            nrm = np.zeros(n)
-            D = np.zeros((n, kk)) if kk else np.zeros((n, 0))
-            for k2 in range(dim):
-                nrm = nrm + V[:, k2] * V[:, k2]
-                if kk:
-                    D = D + V[:, k2][:, None] * C[:, k2][None, :]
-            nrm = np.sqrt(nrm)
-            if kk:
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    negs = (-D) / (nrm[:, None] * cn_arr[None, :])
-                negs = np.where(np.isnan(negs), np.inf, negs)
-                cids = cid_arr[np.argmin(negs, axis=1)]
-            else:
-                cids = np.zeros(n, dtype="int64")
-            # rows whose vector is NULL or not dim-long: the expression
-            # path's dot nulls out -> (null, cid) structs -> nulls-first
-            # min -> FIRST centroid id; their norm is the own-length fold
-            nrm_mask = np.zeros(n, dtype=bool)
-            for i3 in np.nonzero(~good)[0]:
-                v = vs.iloc[i3]
-                if v is None:
-                    nrm_mask[i3] = True
-                    continue
-                acc = 0.0
-                for x in np.asarray(v, dtype=np.float64):
-                    acc = acc + x * x
-                nrm[i3] = np.sqrt(acc)
-            if first_cid is not None and (~good).any():
-                cids[~good] = first_cid
-            data = {}
-            if with_id:
-                data[idname] = pdf["_id"]
-            data[f"{idname}_vec"] = vs
-            data[f"{idname}_nrm"] = pd.arrays.FloatingArray(nrm, nrm_mask)
-            data["cid"] = cids
-            yield pd.DataFrame(data)
+    # ascending cid order (None first): np.lexsort is stable, so score
+    # ties keep the smaller cid
+    cents = sorted(cents, key=lambda c: (c[0] is not None, c[0] or 0))
+    cid_ok = np.array([c is not None for c, _ in cents], dtype=bool)
+    cids = np.array([c or 0 for c, _ in cents], dtype=np.int64)
+    C = vectors.from_pylist([v for _, v in cents])
+    cn = vectors.own_norms(C)
+    cn[cn == 0] = 1.0
+    schema = T.StructType(
+        [
+            T.StructField(idname, df.schema[id_col].dataType),
+            T.StructField(f"{idname}_vec", T.ArrayType(T.DoubleType())),
+            T.StructField(f"{idname}_nrm", T.DoubleType()),
+            T.StructField("cid", T.LongType()),
+        ]
+    )
 
-    cols = [F.col(vec_col).cast("array<double>").alias("_v")]
-    if with_id:
-        cols = [F.col(id_col).alias("_id")] + cols
-    return df.select(*cols).mapInPandas(gen, out_schema)
+    def gen(batch):
+        v = vectors.read(batch.column(1))
+        nrm = vectors.own_norms(v)
+        S, ok = vectors.cosines(v, nrm, C, cn)
+        neg = -S
+        nan = np.isnan(neg)
+        slot = np.lexsort((np.where(nan | ~ok, 0.0, neg), nan, ok))[:, :n]
+        rows = np.repeat(np.arange(len(v.valid)), slot.shape[1])
+        slot = slot.ravel()
+        keep = cid_ok[slot]
+        rows, slot = rows[keep], slot[keep]
+        yield [
+            batch.column(0).take(rows),
+            batch.column(1).take(rows),
+            pa.array(nrm[rows], mask=~v.valid[rows]),
+            pa.array(cids[slot]),
+        ]
+
+    src = df.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+    return vectors.map_batches(src, gen, schema)
 
 
 def ivf_topk(
@@ -715,30 +617,32 @@ def ivf_topk(
     are the codebook indices). Default: a deterministic md5-ordered sample
     of the corpus (portable — the DuckDB oracle reproduces the same pick);
     the IVF mechanics are identical either way, and the codebook is always
-    driver-side metadata of size O(n_lists · dim) broadcast into the
-    assignment expressions below.
+    driver-side metadata of size O(n_lists · dim) shipped to the
+    assignment kernel (assign_cids_arrow) on both sides.
     """
-    import math
-
     if centroids is not None:
-        cents = [(i, list(c)) for i, c in enumerate(centroids)]
+        cents = list(enumerate(centroids))
     else:
-        cents = [
-            (r.cid, list(r.cvec))
-            for r in corpus.select(
+        sample = (
+            corpus.select(
                 F.col(id_col).alias("cid"),
                 F.col(vec_col).cast("array<double>").alias("cvec"),
                 F.md5(F.col(id_col).cast("string")).alias("h"),
             )
             .orderBy("h", "cid")
             .limit(n_lists)
-            .select("cid", "cvec")
             .collect()
-        ]
+        )
+        # list ids are the RANKS of the sampled corpus ids: ranks are longs
+        # whatever the id type, and break score ties exactly as the ids
+        # would (a NULL id stays a None list id, which never joins)
+        rank = {c: i for i, c in enumerate(sorted(
+            r.cid for r in sample if r.cid is not None
+        ))}
+        cents = [(rank.get(r.cid), r.cvec) for r in sample]
     if not cents:
         # empty corpus (or an untrainable codebook): no lists, no neighbors —
-        # an empty result with the contract schema, not an unresolvable
-        # zero-arm array() expression
+        # an empty result with the contract schema
         from pyspark.sql import types as T
 
         return corpus.sparkSession.createDataFrame(
@@ -755,87 +659,25 @@ def ivf_topk(
                 ]
             ),
         )
-    _check_codebook_size(len(cents), max(len(v) for _, v in cents))
-    cent_norms = [math.sqrt(sum(x * x for x in v)) or 1.0 for _, v in cents]
+    _check_codebook_size(
+        len(cents), max((len(v) for _, v in cents if v is not None), default=0)
+    )
 
-    def assign(df: DataFrame, idname: str, n: int) -> DataFrame:
-        # PLAN NOTE: list assignment is pure expression-side — one projection
-        # computing n_lists dot products against literal centroid vectors,
-        # then an array argmax. The previous implementation cross-joined the
-        # corpus with the broadcast centroids and ranked with a Window
-        # partitioned by vector id: a full shuffle of n_lists× the corpus
-        # just to take an argmax. This version has NO Exchange at all.
-        base = df.select(
-            F.col(id_col).alias(idname),
-            F.col(vec_col).cast("array<double>").alias(f"{idname}_vec"),
-        ).withColumn("_nrm", norm(F.col(f"{idname}_vec")))
-        sims = F.array(
-            *[
-                F.struct(
-                    (
-                        -dot(
-                            F.col(f"{idname}_vec"),
-                            F.array(*[F.lit(float(x)) for x in cvec]),
-                        )
-                        / (F.col("_nrm") * F.lit(cn))
-                    ).alias("neg"),
-                    F.lit(cid).alias("cid"),
-                )
-                for (cid, cvec), cn in zip(cents, cent_norms)
-            ]
-        )
-        if n == 1:
-            out = base.select(
-                idname,
-                f"{idname}_vec",
-                F.col("_nrm").alias(f"{idname}_nrm"),
-                F.array_min(sims)["cid"].alias("cid"),
-            )
-        else:
-            # the sims array is the generator input itself (evaluated once
-            # per row); sibling columns are plain attributes, so nothing
-            # heavy collapses into the Generate (cf. dedup.py PLAN NOTEs).
-            # explode_outer + post-filter, NOT plain explode:
-            # InferFiltersFromGenerate would infer size(...)>0 BELOW the
-            # Generate and predicate pushdown expands the whole sims
-            # expression into that filter (re-evaluating n_lists dot
-            # products per row) — the same measured pathology the runner
-            # pattern avoids.
-            out = base.select(
-                idname,
-                f"{idname}_vec",
-                F.col("_nrm").alias(f"{idname}_nrm"),
-                F.explode_outer(
-                    F.slice(F.array_sort(sims), 1, n)["cid"]
-                ).alias("cid"),
-            ).filter(F.col("cid").isNotNull())
-        return out
-
-    # corpus assignment as ONE vectorized Arrow pass (assign_cids_arrow —
-    # bit-exact to the array_min struct ordering; the n_lists interpreted
-    # dot folds per row dominated the query), spread off the
-    # file-layout-bound scan first. Queries stay on the expression path
-    # (tiny, broadcast, and they need the n_probe sorted-slice shape).
-    # Mixed-length codebooks (impossible from the sampled/trained builders
-    # but allowed by the signature) keep the expression path.
+    # corpus assignment as ONE vectorized Arrow pass, spread off the
+    # file-layout-bound scan first; the (tiny, broadcast) query side runs
+    # the same kernel for its n_probe nearest lists
     from .dedup import _spread
 
-    cent_dims = {len(v) for _, v in cents}
-    if len(cent_dims) == 1:
-        corpus_lists = assign_cids_arrow(
-            _spread(corpus.select(id_col, vec_col)),
-            id_col,
-            vec_col,
-            "neighbor_id",
-            cents,
-            cent_norms,
-            cent_dims.pop(),
-        )
-    else:
-        corpus_lists = assign(
-            _spread(corpus.select(id_col, vec_col)), "neighbor_id", 1
-        )
-    query_lists = F.broadcast(assign(queries, "query_id", n_probe))
+    corpus_lists = assign_cids_arrow(
+        _spread(corpus.select(id_col, vec_col)),
+        id_col,
+        vec_col,
+        "neighbor_id",
+        cents,
+    )
+    query_lists = F.broadcast(
+        assign_cids_arrow(queries, id_col, vec_col, "query_id", cents, n_probe)
+    )
     # each corpus vector lives in exactly ONE list, so a (query, neighbor)
     # pair occurs at most once — no dedup shuffle needed; with the broadcast
     # list join and the map-side phase-1 of two_phase_topk, the corpus side
@@ -844,11 +686,11 @@ def ivf_topk(
         F.col("query_id") != F.col("neighbor_id")
     )
     # per-VECTOR norms hoisted out of the per-PAIR expression (the
-    # brute_force_topk treatment, CLAUDE.md): assign() already computes
-    # norm(vec) once per vector for the centroid sims and now carries it
-    # through the join, so scoring runs ONE dot fold per pair instead of
-    # dot + two norm folds; dot/(qn*cn) is the same op order cosine()
-    # ran, so the double is bit-identical
+    # brute_force_topk treatment): the assignment kernel
+    # computes norm(vec) once per vector and carries it through the join,
+    # so scoring runs ONE dot fold per pair instead of dot + two norm
+    # folds; dot/(qn*cn) is the same op order cosine() ran, so the double
+    # is bit-identical
     scored = cands.select(
         "query_id",
         "neighbor_id",
@@ -1047,42 +889,15 @@ def hard_negatives(
     negatives of everything, including each other. Ties break by
     neighbor id. Returns (query_id, neighbor_id, cosine_sim).
 
-    100 TB shape: identical to ``brute_force_topk`` — anchors broadcast,
-    ONE corpus scan, and the group filter prunes candidates BEFORE the
-    bounded two-phase top-k (O(k·partitions) state per anchor, never the
-    candidate set). For anchor sets too big to broadcast, run per-shard.
+    100 TB shape: identical to ``brute_force_topk`` (it IS its scorer,
+    plus the group filter) — ONE corpus scan, and the group filter prunes
+    candidates BEFORE the bounded two-phase top-k (O(k·partitions) state
+    per anchor, never the candidate set). For anchor sets too big to
+    collect or broadcast, run per-shard.
     """
-    # per-VECTOR norms hoisted out of the per-PAIR expression (the
-    # brute_force_topk treatment): one dot fold per surviving pair instead
-    # of dot + two norm folds; dot/(qn*cn) is cosine()'s exact op order,
-    # so the double is bit-identical
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-            F.col(group_col).alias("qg"),
-            norm(F.col(vec_col)).alias("_qn"),
-        )
+    return two_phase_topk(
+        _cosine_pairs(corpus, queries, id_col, vec_col, group_col), k
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col(group_col).alias("cg"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = c.join(
-        q,
-        (F.col("query_id") != F.col("neighbor_id"))
-        & ~F.col("qg").eqNullSafe(F.col("cg")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("_qn") * F.col("_cn"))
-        ).alias("cosine_sim"),
-    )
-    return two_phase_topk(scored, k)
 
 
 def centroid_outliers(

@@ -1406,18 +1406,16 @@ def semantic_dedup(
     Returns ``(id, cid, n_dups, removed)`` for every valid input vector.
 
     100 TB shape: training + assignment reuse ann.kmeans_centroids'
-    expression-side argmin (k literal dot products, no shuffle; the
-    codebook-literal bound caps k*dim); the pairwise step is confined
+    Arrow assignment kernel (ann.assign_cids_arrow, no shuffle; the
+    codebook bound caps k*dim); the pairwise step is confined
     WITHIN clusters — one repartition(cid) Exchange feeds both sides of
     the self-join (ReuseExchange), so cost is sum over clusters of
     |c|^2/2, never n^2. k must scale with the corpus (the paper uses
     ~sqrt(n) clusters); for k beyond the literal bound run per-shard or
     use the hyperplane-LSH path (embedding_near_dups).
     """
-    import math
-
     from . import ann
-    from .ann import dot, norm
+    from .ann import dot
 
     cents = ann.kmeans_centroids(
         df, dim=dim, id_col=id_col, vec_col=vec_col, k=k, n_iter=n_iter,
@@ -1436,11 +1434,9 @@ def semantic_dedup(
             ]
         )
         return spark.createDataFrame([], schema)
-    norms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-    # assignment via the vectorized Arrow kernel (ann.assign_cids_arrow —
-    # bit-exact to the array_min struct ordering), spread off the
-    # file-layout-bound scan; the k interpreted dot folds per row
-    # dominated the pre-join stage
+    # assignment via the vectorized Arrow kernel (ann.assign_cids_arrow),
+    # spread off the file-layout-bound scan; the k interpreted dot folds
+    # per row dominated the pre-join stage
     src = (
         df.select(
             F.col(id_col).alias("vid"),
@@ -1450,13 +1446,7 @@ def semantic_dedup(
     )
     assigned = (
         ann.assign_cids_arrow(
-            _spread(src),
-            "vid",
-            "vec",
-            "vid",
-            list(enumerate(cents)),
-            norms,
-            dim,
+            _spread(src), "vid", "vec", "vid", list(enumerate(cents))
         )
         .select(
             "vid",
@@ -1842,26 +1832,78 @@ def semantic_decontaminate(
     max() over per-pair doubles is order-independent, so the result is
     as engine-exact as the pairwise cosine itself.
 
-    100 TB shape: eval sets are SMALL, so the eval side collects ONCE to
-    an (m × d) matrix embedded in the scoring task (the IVF-codebook /
-    CMS-table discipline) and the corpus streams through one Arrow
-    ``mapInPandas`` pass — linear in |corpus|·|eval| like the previous
-    BroadcastNestedLoopJoin shape, but the |corpus|·|eval|·d multiply-add
-    volume runs vectorized in numpy instead of one interpreted HOF fold
-    per pair (guide §4.2; measured 83.6 → ~2 s at 19k × 870 × 64).
-    BIT-EXACTNESS: the accumulation loops run in ascending dimension
-    order, exactly the left-fold order of ``ann.dot``/``ann.norm``, and
-    every elementary op (product, add, divide, max) is the same single
-    IEEE-754 double op the expression path ran — outputs are
-    bit-identical, not merely close (pinned by the oracle gate). For
-    |eval| beyond a few thousand, bucket first (``embedding_near_dups``'
-    LSH path) — this operator is deliberately the exact-verdict shape.
-    An eval set with MIXED vector lengths falls back to the expression
-    path (zip_with's null-padding semantics are per-pair there), and so
-    does an eval set of more than ``ann.MAX_DRIVER_QUERIES`` rows, which
-    is never collected.
+    Scores follow the vectors.py contract: NULL, NULL-element and
+    zero-norm vectors never hit, nor do pairs of different lengths; a NaN
+    score counts as a hit (Spark orders NaN above every number) and wins
+    max_sim. Duplicate or NULL corpus ids get ONE row each, summing their
+    rows' hits.
+
+    100 TB shape: eval sets are SMALL, so an eval side of at most
+    ``ann.MAX_DRIVER_QUERIES`` rows collects ONCE to the driver and the
+    corpus streams through one Arrow kernel pass (vectors.py) — linear in
+    |corpus|·|eval| like the BroadcastNestedLoopJoin shape, but the
+    |corpus|·|eval|·d multiply-add volume runs vectorized in numpy
+    instead of one interpreted HOF fold per pair (guide §4.2; measured
+    83.6 → ~2 s at 19k × 870 × 64). Its ascending-index fold makes every
+    score bit-identical to the expression path (pinned by the oracle gate
+    and tests/test_vectors.py); a bigger eval side is never collected and
+    takes that broadcast-expression path. For |eval| beyond a few
+    thousand, bucket first (``embedding_near_dups``' LSH path) — this
+    operator is deliberately the exact-verdict shape.
     """
     from .ann import MAX_DRIVER_QUERIES, dot, norm
+
+    ev_rows = (
+        evalset.select(F.col(vec_col).cast("array<double>").alias("v"))
+        .limit(MAX_DRIVER_QUERIES + 1)
+        .collect()
+    )
+    if len(ev_rows) <= MAX_DRIVER_QUERIES:
+        import numpy as np
+        from pyspark.sql import types as T
+
+        from . import vectors
+
+        E = vectors.from_pylist([r["v"] for r in ev_rows])
+        en = vectors.own_norms(E)
+        thr = float(threshold)
+
+        def score(batch):
+            ids = batch.column(0)
+            cv = vectors.read(batch.column(1))
+            cn = vectors.own_norms(cv)
+            S, ok = vectors.cosines(cv, cn, E, en)
+            # the expression path's `norm > 0` filter on both sides: a
+            # zero vector never hits, not even against a NaN-norm one
+            # (whose norm product is NaN, not 0)
+            ok &= ~(cn <= 0)[:, None] & ~(en <= 0)[None, :]
+            hit = ok & ((S >= thr) | np.isnan(S))
+            n_hits = hit.sum(axis=1)
+            sel = np.nonzero(n_hits)[0]
+            # np.max propagates NaN: the greatest value in Spark's order
+            max_sim = np.where(hit[sel], S[sel], -np.inf).max(
+                axis=1, initial=-np.inf
+            )
+            yield [ids.take(sel), n_hits[sel], max_sim]
+
+        out_schema = T.StructType(
+            [
+                T.StructField(id_col, corpus.schema[id_col].dataType),
+                T.StructField("n_hits", T.LongType()),
+                T.StructField("max_sim", T.DoubleType()),
+            ]
+        )
+        src = corpus.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>")
+        )
+        # the Arrow stage otherwise inherits the scan's file-layout-bound
+        # task count (one compact parquet file = one core); the kernel
+        # emits one row per corpus ROW, so duplicate ids fold after it
+        hits = vectors.map_batches(_spread(src), score, out_schema, len(E.valid))
+        return hits.groupBy(id_col).agg(
+            F.sum("n_hits").cast("bigint").alias("n_hits"),
+            F.max("max_sim").alias("max_sim"),
+        )
 
     def _side(df: DataFrame, pre: str) -> DataFrame:
         return (
@@ -1873,94 +1915,11 @@ def semantic_decontaminate(
             .filter(F.col(f"{pre}n") > 0)
         )
 
-    ev_rows = (
-        evalset.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .limit(MAX_DRIVER_QUERIES + 1)
-        .collect()
-    )
-    ev_vecs = [r["v"] for r in ev_rows if r["v"] is not None]
-    dims = {len(v) for v in ev_vecs}
-    if len(ev_rows) <= MAX_DRIVER_QUERIES and len(dims) <= 1:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        d = dims.pop() if dims else 0
-        E = np.asarray(ev_vecs, dtype=np.float64).reshape(len(ev_vecs), d)
-        # sequential ascending-dim norm — ann.norm's exact fold order
-        en = np.zeros(E.shape[0])
-        for k in range(d):
-            en = en + E[:, k] * E[:, k]
-        en = np.sqrt(en)
-        kept = en > 0
-        E, en = E[kept], en[kept]
-        m = E.shape[0]
-        thr = float(threshold)
-        out_schema = T.StructType(
-            [
-                T.StructField(id_col, corpus.schema[id_col].dataType),
-                T.StructField("n_hits", T.LongType()),
-                T.StructField("max_sim", T.DoubleType()),
-            ]
-        )
-
-        def score(batches):
-            for pdf in batches:
-                if m == 0 or len(pdf) == 0:
-                    yield pd.DataFrame(
-                        {
-                            id_col: pdf["_id"][:0],
-                            "n_hits": pd.Series([], dtype="int64"),
-                            "max_sim": pd.Series([], dtype="float64"),
-                        }
-                    )
-                    continue
-                vs = pdf["_v"]
-                good = np.fromiter(
-                    (v is not None and len(v) == d for v in vs),
-                    dtype=bool,
-                    count=len(vs),
-                )
-                ids = pdf["_id"][good]
-                V = (
-                    np.array([np.asarray(v) for v in vs[good]])
-                    .astype(np.float64)
-                    .reshape(int(good.sum()), d)
-                )
-                n = V.shape[0]
-                cn = np.zeros(n)
-                sims = np.zeros((n, m))
-                for k in range(d):
-                    cn = cn + V[:, k] * V[:, k]
-                    sims = sims + V[:, k][:, None] * E[:, k][None, :]
-                cn = np.sqrt(cn)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = sims / (cn[:, None] * en[None, :])
-                mask = sims >= thr  # NaN (zero-norm corpus row) -> False
-                nh = mask.sum(axis=1)
-                sel = nh > 0
-                ms = np.max(
-                    np.where(mask[sel], sims[sel], -np.inf), axis=1
-                ) if sel.any() else np.array([], dtype=np.float64)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids[sel],
-                        "n_hits": nh[sel].astype("int64"),
-                        "max_sim": ms,
-                    }
-                )
-
-        src = corpus.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
-        # the Arrow stage otherwise inherits the scan's file-layout-bound
-        # task count (one compact parquet file = one core)
-        return _spread(src).mapInPandas(score, out_schema)
-
     co = _side(corpus, "c_")
     ev = F.broadcast(_side(evalset, "e_"))
-    sim = dot(F.col("c_v"), F.col("e_v")) / (F.col("c_n") * F.col("e_n"))
+    sim = F.try_divide(
+        dot(F.col("c_v"), F.col("e_v")), F.col("c_n") * F.col("e_n")
+    )
     hits = co.crossJoin(ev).select(
         "c_id", sim.alias("sim")
     ).filter(F.col("sim") >= F.lit(float(threshold)))

@@ -4231,7 +4231,9 @@ def _md5_low32_sql(expr: str) -> str:
 
 
 def _hyperplane_bucket_sql(vec_expr: str, planes: list[list[float]]) -> str:
-    """DuckDB expression mirroring ann.lsh_bucket for one table's planes."""
+    """DuckDB expression mirroring ann.lsh_bucket for one table's planes —
+    the expression reference that ann.lsh_buckets_arrow's vector kernel
+    (vectors.dots, ascending-index fold) reproduces bit for bit."""
     terms = []
     for j, p in enumerate(planes):
         arr = "[" + ", ".join(repr(float(x)) for x in p) + "]"
